@@ -44,6 +44,22 @@ class DimensionMismatchError(ValueError):
     silently truncates longer ones (main.go:263-275); we validate."""
 
 
+# The search result row (main.go:246-253): EmbeddingID = doc metadata
+# name (main.go:248), Metadata = chunk metadata (main.go:251), and D-3:
+# the real collection (the reference bug aliases the doc name,
+# main.go:253). SQL strings are parsed JVM-side; built from Column
+# objects, every column and alias would be a py4j round trip.
+_RESULT_COLUMNS = (
+    "doc_name AS embedding_id",
+    "similarity",
+    "position",
+    "chunk_metadata AS metadata",
+    "text",
+    "collection AS collection_name",
+    "doc_id",
+)
+
+
 class VectorEngine:
     def __init__(
         self,
@@ -72,6 +88,12 @@ class VectorEngine:
         self.warehouse_path = warehouse_path
         self.dim = dim
         self.table_format = table_format
+
+    def _check_query_dim(self, query_vector: Sequence[float]) -> None:
+        if self.dim is not None and len(query_vector) != self.dim:
+            raise DimensionMismatchError(
+                f"query dim {len(query_vector)} != engine dim {self.dim}"
+            )
 
     def _snapshot_table(self):
         from nebuia_vector_db_spark.sources.snapshot import SnapshotTable
@@ -184,24 +206,24 @@ class VectorEngine:
 
     def chunks(self, collections: Sequence[str] | None = None) -> DataFrame:
         """The exploded search relation (SURVEY §1.4): one row per
-        chunk, 1-based ``position`` (main.go:252)."""
-        docs = self.documents(collections)
-        return docs.select(
+        chunk, 1-based ``position`` (main.go:252). Written as SQL
+        strings for the same reason as ``_RESULT_COLUMNS``."""
+        return self.documents(collections).selectExpr(
             "collection",
             "doc_id",
-            F.col("metadata.name").alias("doc_name"),
-            F.col("metadata").alias("doc_metadata"),
-            F.posexplode("chunks").alias("pos0", "chunk"),
-        ).select(
+            "metadata.name AS doc_name",
+            "metadata AS doc_metadata",
+            "posexplode(chunks) AS (pos0, chunk)",
+        ).selectExpr(
             "collection",
             "doc_id",
             "doc_name",
             "doc_metadata",
-            (F.col("pos0") + 1).cast("int").alias("position"),
-            F.col("chunk.text").alias("text"),
-            F.col("chunk.embedding").alias("embedding"),
-            F.col("chunk.metadata").alias("chunk_metadata"),
-            F.col("chunk.semantic_score").alias("semantic_score"),
+            "CAST(pos0 + 1 AS INT) AS position",
+            "chunk.text AS text",
+            "chunk.embedding AS embedding",
+            "chunk.metadata AS chunk_metadata",
+            "chunk.semantic_score AS semantic_score",
         )
 
     def search(
@@ -268,10 +290,7 @@ class VectorEngine:
         over the scored scan; rows are ordered (doc_id, position) for
         deterministic presentation, which is the only exchange in the
         plan."""
-        if self.dim is not None and len(query_vector) != self.dim:
-            raise DimensionMismatchError(
-                f"query dim {len(query_vector)} != engine dim {self.dim}"
-            )
+        self._check_query_dim(query_vector)
         ch = self.chunks([collection_name])
         if where is not None:
             ch = ch.where(F.expr(where) if isinstance(where, str) else where)
@@ -279,15 +298,7 @@ class VectorEngine:
         return (
             ch.withColumn("similarity", dot(F.col("embedding"), qn))
             .where(F.col("similarity") >= F.lit(float(min_similarity)))
-            .select(
-                F.col("doc_name").alias("embedding_id"),
-                "similarity",
-                "position",
-                F.col("chunk_metadata").alias("metadata"),
-                "text",
-                F.col("collection").alias("collection_name"),
-                "doc_id",
-            )
+            .selectExpr(*_RESULT_COLUMNS)
             .orderBy("doc_id", "position")
         )
 
@@ -300,10 +311,7 @@ class VectorEngine:
         where: "F.Column | str | None" = None,
         min_similarity: float | None = None,
     ) -> DataFrame:
-        if self.dim is not None and len(query_vector) != self.dim:
-            raise DimensionMismatchError(
-                f"query dim {len(query_vector)} != engine dim {self.dim}"
-            )
+        self._check_query_dim(query_vector)
         ch = self.chunks(collections)
         if where is not None:
             ch = ch.where(F.expr(where) if isinstance(where, str) else where)
@@ -324,15 +332,7 @@ class VectorEngine:
                     F.col("similarity") >= F.lit(float(min_similarity))
                 )
             # arrow path drops the vector column; restore result shape
-            return scored.select(
-                F.col("doc_name").alias("embedding_id"),
-                "similarity",
-                "position",
-                F.col("chunk_metadata").alias("metadata"),
-                "text",
-                F.col("collection").alias("collection_name"),
-                "doc_id",
-            )
+            return scored.selectExpr(*_RESULT_COLUMNS)
         qn = normalize_query(query_vector)  # once per query, main.go:179-183
         scored = ch.withColumn("similarity", dot(F.col("embedding"), qn))
         if min_similarity is not None:
@@ -342,18 +342,7 @@ class VectorEngine:
                 F.col("similarity") >= F.lit(float(min_similarity))
             )
         return (
-            scored.select(
-                # EmbeddingID = doc metadata name (main.go:248)
-                F.col("doc_name").alias("embedding_id"),
-                "similarity",
-                "position",
-                F.col("chunk_metadata").alias("metadata"),  # main.go:251
-                "text",
-                # D-3: real collection (reference bug aliases doc name,
-                # main.go:253)
-                F.col("collection").alias("collection_name"),
-                "doc_id",
-            )
+            scored.selectExpr(*_RESULT_COLUMNS)
             # D-1/D-2: always sorted, deterministic ties
             .orderBy(F.desc("similarity"), "doc_id", "position")
             .limit(top_k)
@@ -382,10 +371,7 @@ class VectorEngine:
         embedding_id, text, rank_vec, rank_kw, rrf_score) — a chunk
         absent from one signal's top-``n_cand`` list carries a null
         rank there and contributes 0 for it."""
-        if self.dim is not None and len(query_vector) != self.dim:
-            raise DimensionMismatchError(
-                f"query dim {len(query_vector)} != engine dim {self.dim}"
-            )
+        self._check_query_dim(query_vector)
         from nebuia_vector_db_spark.operators.hybrid import (
             rrf_search,
             rrf_search_bm25,

@@ -9,7 +9,12 @@ Two execution strategies:
 - ``dot(col, qlit)`` — pure SQL higher-order functions
   (``aggregate(zip_with(...))``): runs inside whole-stage codegen,
   deterministic left-to-right summation (bit-identical to a sequential
-  C loop), used for oracle-checked correctness queries.
+  C loop), used for oracle-checked correctness queries. The query
+  vector enters the plan as one ``array<double>`` literal built by
+  :func:`lit_vector` in a fixed number of py4j round trips — the
+  vector crosses to the JVM once, as its IEEE-754 bytes, instead of
+  as one ``F.lit`` per element (about 4 round trips each, ~1.6k for
+  a d=384 query).
 - ``numpy_dot_udf(q)`` — Arrow-batched pandas_udf doing one BLAS
   matrix-vector product per batch: the 10-100× fast path for bench
   and large scans (SURVEY.md §4 P-4).
@@ -17,20 +22,26 @@ Two execution strategies:
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Sequence
 
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.utils import get_active_spark_context
 
 
 def normalize_query(q: Sequence[float]) -> list[float]:
     """L2-normalize a query vector driver-side (float64).
 
     ≙ main.go:179-183 (gonum ``mat.Norm(qv, 2)`` then scale). Computed
-    once per query and inlined as a literal array so Catalyst constant-
-    folds it (SURVEY.md §4 P-3).
+    once per query and inlined into the plan as ONE array literal
+    (:func:`lit_vector`): the vector crosses py4j once as its raw
+    bytes, where a per-element ``F.lit`` costs about 4 round trips
+    each, and the analyzer sees a single ``Literal`` instead of a
+    d-child ``CreateArray`` to resolve and constant-fold (SURVEY.md
+    §4 P-3).
     """
     arr = np.asarray(q, dtype=np.float64)
     # sequential left-to-right sum — bit-identical to the SQL
@@ -45,8 +56,43 @@ def normalize_query(q: Sequence[float]) -> list[float]:
     return [x / n for x in arr.tolist()]
 
 
-def _lit_vec(q: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in q])
+# gateway -> JVM handles for lit_vector; every py4j class or member
+# lookup is a round trip of its own, so they are resolved once
+_LITERAL_HANDLES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _literal_handles(sc) -> tuple:
+    handles = _LITERAL_HANDLES.get(sc._gateway)
+    if handles is None:
+        jvm = sc._jvm
+        types = jvm.org.apache.spark.sql.types.DataTypes
+        handles = _LITERAL_HANDLES[sc._gateway] = (
+            jvm.double,
+            jvm.java.nio.ByteBuffer.wrap,
+            jvm.org.apache.spark.sql.catalyst.util.GenericArrayData,
+            jvm.org.apache.spark.sql.catalyst.expressions.Literal,
+            types.createArrayType(types.DoubleType, False),
+            jvm.org.apache.spark.sql.classic.ExpressionUtils.column,
+        )
+    return handles
+
+
+def lit_vector(q: Sequence[float]) -> Column:
+    """``q`` as one ``array<double>`` literal (``containsNull=false``)
+    built in a fixed number of py4j round trips, whatever its length.
+
+    The float64 values cross as one big-endian byte array and are
+    decoded JVM-side (``ByteBuffer.asDoubleBuffer``), so every bit —
+    -0.0, subnormals, NaN, ±inf — arrives unchanged. The literal is
+    exactly what Catalyst constant-folds ``array(lit(q0), lit(q1),
+    ...)`` into, so optimized plans and results do not change.
+    """
+    sc = get_active_spark_context()
+    double, wrap, array_data, literal, array_type, column = _literal_handles(sc)
+    raw = np.asarray(q, dtype=">f8")
+    values = sc._gateway.new_array(double, raw.size)
+    wrap(raw.tobytes()).asDoubleBuffer().get(values)
+    return Column(column(literal(array_data(values), array_type)))
 
 
 def dot(vec: Column | str, q: Column | Sequence[float]) -> Column:
@@ -59,7 +105,7 @@ def dot(vec: Column | str, q: Column | Sequence[float]) -> Column:
     """
     vec = F.col(vec) if isinstance(vec, str) else vec
     if not isinstance(q, Column):
-        q = _lit_vec(q)
+        q = lit_vector(q)
     return F.aggregate(
         F.zip_with(vec, q, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),

@@ -24,7 +24,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nebuia_vector_db_spark.functions.vector import normalize_query
+from nebuia_vector_db_spark.functions.vector import lit_vector, normalize_query
 
 # guards the all-zero vector (scale 0 → division by zero); any
 # positive denormal works, the codes come out 0 either way
@@ -56,12 +56,10 @@ def sq8_similarity(
 ) -> Column:
     """dot(q/‖q‖, dequantized vector) as one codegen'd fold —
     ``s · Σ qn_i · code_i`` (the scale factors out of the sum)."""
-    qn = normalize_query(qvec)
-    qarr = F.array(*[F.lit(float(x)) for x in qn])
     acc = F.aggregate(
         F.zip_with(
             F.col(codes_col),
-            qarr,
+            lit_vector(normalize_query(qvec)),
             lambda c, q: c.cast("double") * q,
         ),
         F.lit(0.0),

@@ -486,3 +486,46 @@ def test_range_search_returns_all_above_threshold(spark, tmp_path_factory):
     assert eng.range_search("r", q, min_similarity=1e9).count() == 0
     with pytest.raises(DimensionMismatchError):
         eng.range_search("r", [1.0, 0.0], min_similarity=0.2)
+
+
+def test_search_plan_construction_cost_is_independent_of_dim(
+    spark, tmp_path_factory
+):
+    """Building a search / multi_search plan costs the same number of
+    py4j round trips at d=4 and d=384: the query vector crosses to the
+    JVM as one literal, not one ``lit`` per element. Memory-release
+    commands (``m``) are left out — Python's garbage collector decides
+    when those are sent."""
+    client = spark.sparkContext._gateway._gateway_client
+    engines = {}
+    for d in (4, 384):
+        eng = VectorEngine(spark, str(tmp_path_factory.mktemp(f"cost{d}")), dim=d)
+        for c in ("p", "q"):
+            eng.store(c, _mkdocs(2, 2, d, seed=d, name_prefix=c))
+        engines[d] = eng
+    routes = {
+        "search": lambda eng, q: eng.search("p", q, 5),
+        "multi_search": lambda eng, q: eng.multi_search(["p", "q"], q, 5),
+    }
+    sent = [0]
+    original = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m"):
+            sent[0] += 1
+        return original(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        counts = {}
+        for name, build in routes.items():
+            for d, eng in engines.items():
+                q = np.random.default_rng(d).normal(size=d).tolist()
+                build(eng, q)  # warm: one-time per-session lookups
+                sent[0] = 0
+                build(eng, q)
+                counts[name, d] = sent[0]
+    finally:
+        client.send_command = original
+    for name in routes:
+        assert counts[name, 4] == counts[name, 384], counts
